@@ -1,10 +1,17 @@
 #!/usr/bin/env python3
 """Local replica of the driver's correctness gate: compare Verify output
 parquet dirs against DuckDB oracle results (columns sorted by name, rows
-sorted by all columns)."""
+sorted by all columns).
+
+usage: check_oracle.py <out_dir> <sf_dir> [query ...]
+With query names, only those queries are checked. Exits 1 on any failure.
+"""
 import duckdb, json, sys, os
 
+if len(sys.argv) < 3:
+    sys.exit(__doc__)
 out_dir, sf_dir = sys.argv[1], sys.argv[2]
+only = set(sys.argv[3:])
 con = duckdb.connect()
 for t in ["documents", "embeddings", "lineitem", "orders", "events", "region",
           "nation", "customer", "supplier", "part"]:
@@ -13,7 +20,11 @@ for t in ["documents", "embeddings", "lineitem", "orders", "events", "region",
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
 oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
 fails = 0
+for name in sorted(only - oracle.keys()):
+    print(f"UNKNOWN QUERY {name}"); fails += 1
 for name, sql in sorted(oracle.items()):
+    if only and name not in only:
+        continue
     pdir = f"{out_dir}/{name}"
     if not os.path.isdir(pdir):
         print(f"MISSING OUTPUT {name}"); fails += 1; continue

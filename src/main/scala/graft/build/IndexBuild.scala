@@ -452,11 +452,6 @@ object IndexBuild {
                           sum_tf: Long, max_tf: Int, n_bytes: Int,
                           postings: Array[Byte])
 
-  /** Stage 3/4 — posting segments. ONE shuffle: range-repartition + sort on
-    * (bucket, key, range_id, doc_id); the streaming segment builder then
-    * emits one delta+varint block segment per (key, range_id) run. Resume
-    * unit: bucket.
-    */
   /** Posting segment rows for id-stamped chunk rows. ONE shuffle: hash
     * repartition on (key, range_id) + in-partition sort; the streaming
     * segment builder then emits one delta+varint block segment per

@@ -18,11 +18,7 @@ object Similarity {
     * evaluating the same expression sequentially reproduces it.
     */
   private def cosinePermilleExpr(a: String, b: String): String =
-    s"""CAST(floor(
-          aggregate(zip_with($a, $b, (x, y) -> CAST(x AS double) * CAST(y AS double)), CAST(0.0 AS double), (acc, v) -> acc + v)
-          / sqrt(aggregate($a, CAST(0.0 AS double), (acc, v) -> acc + CAST(v AS double) * CAST(v AS double)))
-          / sqrt(aggregate($b, CAST(0.0 AS double), (acc, v) -> acc + CAST(v AS double) * CAST(v AS double)))
-          * 1000) AS long)"""
+    s"CAST(floor(${cosineDoubleExpr(a, b)} * 1000) AS long)"
 
   /** Brute-force top-k neighbors for each query vector (vec_id < nQueries)
     * among the rest, ranked by exact cosine (desc, then neighbor id).

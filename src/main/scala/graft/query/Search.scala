@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.build.IndexBuild
-import graft.core.{Gram, Postings, Tokenizer}
+import graft.core.{Gram, Tokenizer}
 
 /** Query engine over a built index directory — the Spark-native rebuild of
   * the reference's `search` path (reference: cmdSearch fts-lmdb.go:1046-1081,
@@ -14,16 +14,16 @@ import graft.core.{Gram, Postings, Tokenizer}
   *
   * Plan shapes:
   *  - candidate retrieval prunes the gram-postings scan to the query grams'
-  *    bucket partitions (partition pruning) + key pushdown, then either
-  *    intersects as one hash aggregation (count == |Q|, partial+final agg,
-  *    one shuffle) or as a smallest-df-first semi-join chain;
+  *    bucket partitions (partition pruning) + key pushdown, then intersects
+  *    per doc range with a block-skipping kernel (no shuffle);
   *  - candidates are verified against chunk text AFTER hydration, exactly
   *    like the reference's candidates-then-verify split;
   *  - BM25 groups the query terms' segments by doc range (range_id) so the
   *    WAND kernel runs document-partitioned; only per-range top-k rows and
   *    the final global TakeOrdered cross the wire.
   */
-class Search(spark: SparkSession, dir: String,
+class Search(private[graft] val spark: SparkSession,
+             private[graft] val dir: String,
              /** see [[MaxInlineCandidates]]; tests inject 0 to force the
                * join-hydration path */
              maxInlineCandidates: Int = Search.DefaultMaxInlineCandidates,
@@ -99,14 +99,15 @@ class Search(spark: SparkSession, dir: String,
   private def termBucket(t: String): Int =
     IndexBuild.termBucket(t, stats.nBuckets)
 
-  /** Size-gated driver cache of the whole term dictionary: below
-    * [[Search.MaxInlineDictTerms]] rows (a parquet-footer count, no data
-    * read) the (term, df) map is collected once per Search instance and
-    * every query's dictionary slice is a driver map probe instead of a
-    * Spark job — the same bounded-collect discipline as [[gramDict]] /
-    * [[tombstonedIds]]. Above the gate (web-scale vocabularies) the cache
-    * stays empty and [[dictLookup]] falls back to the pruned per-query
-    * scan. Bound to the index state at construction, like `stats`.
+  /** Size-gated driver cache of the whole term dictionary: at or below
+    * [[Search.MaxInlineDictTerms]] rows (one `LIMIT gate+1` collect that
+    * reads at most gate+1 rows) the (term, df) map is collected once per
+    * Search instance and every query's dictionary slice is a driver map
+    * probe instead of a Spark job — the same bounded-collect discipline as
+    * [[gramDict]] / [[tombstonedIds]]. Above the gate (web-scale
+    * vocabularies) the cache stays empty and [[dictLookup]] falls back to
+    * the pruned per-query scan. Bound to the index state at construction,
+    * like `stats`.
     */
   private lazy val inlineDict: Option[Map[String, Long]] = {
     // ONE bounded job, not count-then-collect: a LIMIT gate+1 collect
@@ -162,12 +163,6 @@ class Search(spark: SparkSession, dir: String,
       .as[Seg]
   }
 
-  /** Exploded (key, doc_id) postings for the given keys. */
-  private def exploded(keys: Seq[String], gramsTable: Boolean): DataFrame =
-    segments(keys, gramsTable)
-      .flatMap(s => Postings.decodeAll(s.postings)._1.map(d => (s.key, d)))
-      .toDF("key", "doc_id")
-
   // ---------------------------------------------------------------- BM25
 
   /** BM25 top-k (conjunctive = every term must match). Returns
@@ -204,46 +199,6 @@ class Search(spark: SparkSession, dir: String,
     perRange.toDF("doc_id", "score")
       .orderBy($"score".desc, $"doc_id".asc)
       .limit(k)
-  }
-
-  /** Brute-force BM25 (oracle / small scale): same contributions summed in
-    * the same lexicographic term order — must be rank- and score-identical
-    * to [[bm25TopK]].
-    */
-  def bm25BruteForce(query: Seq[String], k: Int, conjunctive: Boolean): DataFrame = {
-    val terms = query.flatMap(Tokenizer.terms).distinct.sorted
-    val dict = dictLookup(terms)
-    if (terms.isEmpty || (conjunctive && !terms.forall(dict.contains)))
-      return spark.emptyDataset[Wand.ScoredDoc].toDF("doc_id", "score")
-    val present = terms.filter(dict.contains)
-    val n = stats.nDocs
-    val idfs = present.map(t => t -> Wand.idf(n, dict(t))).toMap
-    val (k1, b, avgdl) = (stats.k1, stats.b, stats.avgdl)
-    val termsB = present.toArray // lex-sorted
-    // same live view as the WAND kernels (size-gated via liveFilter).
-    // Term freqs are re-derived from the chunk text (the docs store keeps
-    // no token arrays) — deterministic, identical to the indexed postings.
-    val rows = liveFilter(spark.read.parquet(IndexBuild.docsDir(dir))
-        .select($"doc_id", $"dl", $"chunk_text"))
-      .as[(Long, Int, String)]
-      .flatMap { case (docId, dl, text) =>
-        {
-        val m = Tokenizer.termFreqs(text).toMap
-        if (conjunctive && !termsB.forall(m.contains)) Iterator.empty
-        else {
-          var s = 0.0
-          var matched = false
-          termsB.foreach { t =>
-            m.get(t).foreach { f =>
-              s += Wand.contribution(idfs(t), f, dl.toLong, k1, b, avgdl)
-              matched = true
-            }
-          }
-          if (matched) Iterator(Wand.ScoredDoc(docId, s)) else Iterator.empty
-        }
-        }
-      }
-    rows.toDF("doc_id", "score").orderBy($"score".desc, $"doc_id".asc).limit(k)
   }
 
   // ------------------------------------------------- candidate retrieval
@@ -289,41 +244,6 @@ class Search(spark: SparkSession, dir: String,
         Wand.intersect(cursors, live)
       }
     }.toDF("doc_id")
-  }
-
-  /** [[candidates]] as one hash aggregation (count == |Q|) — kept for plan
-    * comparison and as the shape that generalizes to scoring.
-    */
-  def candidatesAgg(args: Seq[String], partial: Boolean = false): DataFrame = {
-    val grams = Gram.gramsSorted(partial, args)
-    val df = gramDictLookup(grams.toSeq)
-    if (grams.isEmpty || grams.exists(g => !df.contains(g)))
-      return spark.range(0).select($"id".as("doc_id"))
-    val keys = grams.map(g => s"g$g").toSeq
-    liveFilter(exploded(keys, gramsTable = true))
-      .groupBy($"doc_id").agg(count(lit(1)).as("hits"))
-      .where($"hits" === grams.length)
-      .select($"doc_id")
-  }
-
-  /** Same semantics as [[candidates]] but as a smallest-df-first left-semi
-    * join chain (the reference's seed-smallest strategy,
-    * fts-lmdb.go:1505-1514). Kept for plan comparison/benchmarks.
-    */
-  def candidatesSemiJoin(args: Seq[String], partial: Boolean = false): DataFrame = {
-    val grams = Gram.gramsSorted(partial, args)
-    if (grams.isEmpty) return spark.range(0).select($"id".as("doc_id"))
-    val dfs = gramDictLookup(grams.toSeq)
-    if (grams.exists(g => !dfs.contains(g)))
-      return spark.range(0).select($"id".as("doc_id"))
-    val ordered = grams.sortBy(g => dfs(g)) // ascending df: seed smallest
-    var acc = liveFilter(exploded(Seq(s"g${ordered.head}"), gramsTable = true))
-      .select("doc_id")
-    ordered.tail.foreach { g =>
-      acc = acc.join(exploded(Seq(s"g$g"), gramsTable = true).select("doc_id"),
-        Seq("doc_id"), "left_semi")
-    }
-    acc
   }
 
   /** Fuzzy gram-overlap scoring (reference fuzzyMatch fts-lmdb.go:1530-1550;

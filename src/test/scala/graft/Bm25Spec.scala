@@ -2,6 +2,7 @@ package graft
 
 import graft.build.IndexBuild
 import graft.query.Search
+import graft.SearchOracles._
 
 /** BM25 rank-identity: the block-max WAND path must return exactly the same
   * top-k (doc ids AND scores, bitwise doubles) as the brute-force oracle,

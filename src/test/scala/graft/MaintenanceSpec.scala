@@ -3,6 +3,7 @@ package graft
 import graft.build.IndexBuild
 import graft.maint.Maintenance
 import graft.query.Search
+import graft.SearchOracles._
 import graft.sources.WebCorpus
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}

@@ -2,6 +2,7 @@ package graft
 
 import graft.build.IndexBuild
 import graft.query.Search
+import graft.SearchOracles._
 import graft.sources.WebCorpus
 import scala.util.Random
 

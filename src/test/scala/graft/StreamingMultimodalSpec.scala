@@ -223,4 +223,13 @@ class StreamingMultimodalSpec extends SparkSuite {
       } else assert(r.payload.sameElements(o.payload))
     }
   }
+
+  test("decode: a RIFF chunk size near Int.MaxValue fails fast, no Int overflow") {
+    import Multimodal.MediaCodec
+    val bb = java.nio.ByteBuffer.allocate(24).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    bb.put("RIFF".getBytes("US-ASCII")).putInt(16).put("WAVE".getBytes("US-ASCII"))
+    bb.put("fmt ".getBytes("US-ASCII")).putInt(0x7FFFFFF0) // off + 8 + size wraps
+    val e = intercept[IllegalArgumentException](MediaCodec.decode(bb.array()))
+    assert(e.getMessage.startsWith("requirement failed: bad RIFF chunk"), e.getMessage)
+  }
 }
